@@ -6,7 +6,7 @@ S3 → gunzip → split-concatenated-CloudWatch-JSON → flatten → enrich →
 batched-HTTP shipper; see ``/root/reference/kinesis-to-humio.py``),
 widened into a full relational + streaming + LLM-data-pipeline engine:
 
-- ``sources``   — parquet table loaders, raw-binary shipper-file source.
+- ``sources``   — parquet table loaders, the raw shipper-file reader.
 - ``functions`` — deterministic scalar/text/vector helpers (JVM built-ins
   first; decimal-safe aggregation so results are engine-reproducible).
 - ``operators`` — composed DataFrame operators: as-of join, sessionize,

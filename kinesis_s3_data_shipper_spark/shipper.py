@@ -12,6 +12,9 @@ Flag parity (reference → here):
   binaryFile streams content)
 - ``--debug`` (K:268)                     → ``--debug``
 
+Batch and ``--stream`` share one landing-dir reader; ``--stream``
+refuses the batch-only ``--payloads``/``--post-url``/``--processed-dir``.
+
 Secrets passed via ``--token`` are redacted when the config is echoed,
 like the reference's pp_args (K:236-245).
 """
@@ -22,6 +25,7 @@ import argparse
 import json
 import sys
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,6 +33,7 @@ from .ingest.pipeline import build_payloads, flatten_events, parse_blocks
 from .ingest.splitter import split_blocks
 from .ingest.tracking import filter_unprocessed, record_processed
 from .session import get_session
+from .sources.kinesis import landing_files, listed_paths
 
 REDACT_KEYS = ("token", "secret", "password", "key")
 
@@ -76,12 +81,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "URL's structured-ingest endpoint through a "
                         "per-executor pooled transport (the reference's "
                         "HTTP sink, with idempotency keys + retry)")
-    p.add_argument("--declarative", action="store_true",
-                   help="batch mode: scan blocks via the custom 'shipper' "
-                        "DataSource (spark.read.format('shipper')) instead "
-                        "of binaryFile + splitter. Tracking keys become "
-                        "plain OS paths rather than file: URIs — keep one "
-                        "mode per --processed-dir")
     p.add_argument("--debug", action="store_true")
     return p
 
@@ -102,53 +101,35 @@ def _read_processed(spark, processed_dir: str) -> DataFrame | None:
         raise
 
 
+def _paths_frame(spark, paths: list[str]) -> DataFrame:
+    """A one-column `path` frame, from pandas so that it plans as a
+    LocalTableScan and not as a job-costing scan of a parallelized RDD."""
+    return spark.createDataFrame(pd.DataFrame({"path": paths}), "path string")
+
+
 def run_batch(spark, ns) -> int:
-    if ns.declarative:
-        from .sources.shipper_format import _list_files
-        from .sources.shipper_format import register as register_shipper
-        register_shipper(spark)
-        # Listing happens driver-side (the DataSource planner does the
-        # same walk), so empty files still enter the worklist and get
-        # tracked/warned even though they yield zero block rows.
-        listing = spark.createDataFrame(
-            [(p,) for p in _list_files(ns.input, ns.prefix)], "path string")
-        raw = None
-    else:
-        raw = (spark.read.format("binaryFile")
-               .option("recursiveFileLookup", "true")
-               .load(ns.input)
-               .select("path", "content"))
-        if ns.prefix:
-            raw = raw.filter(F.col("path").startswith(ns.prefix))
-        listing = raw.select("path")
+    raw = landing_files(spark.read, ns.input, ns.prefix)
+    # The work list is the frame's file index, so 0-byte files (which
+    # the binaryFile scan drops) are still warned about and recorded,
+    # like the reference's zero-block files (K:114-115, K:172-174).
+    worklist = listed_paths(raw, ns.prefix)
     if ns.processed_dir:
         processed = _read_processed(spark, ns.processed_dir)
         if processed is not None:
-            listing = filter_unprocessed(listing, processed, key_col="path")
+            worklist = sorted(r.path for r in filter_unprocessed(
+                _paths_frame(spark, worklist), processed,
+                key_col="path").collect())
 
-    # Materialize the work list ONCE (sorted — the reference's
-    # lexicographic work-list order, K:292) and pin the whole run to
-    # this snapshot: the write and the processed-record below must see
-    # the SAME file set, or a file landing between two lazy re-listings
-    # gets recorded as processed without its events ever being written.
-    # Driver memory: path strings only — the same order of magnitude
-    # Spark's own InMemoryFileIndex already holds for this listing.
-    worklist = sorted(r.path for r in listing.collect())
-    # Empty-input short-circuit (reference parity, K:284-286).
+    # The run is pinned to this sorted snapshot (the reference's
+    # lexicographic work-list order, K:292): the write and the
+    # processed record below see the same file set. Empty-input
+    # short-circuit: reference parity, K:284-286.
     if not worklist:
         print("no unprocessed input files matched; nothing to do",
               file=sys.stderr)
         return 0
-    work_df = spark.createDataFrame([(p,) for p in worklist], "path string")
-    if ns.declarative:
-        reader = spark.read.format("shipper")
-        if ns.prefix:
-            reader = reader.option("prefix", ns.prefix)
-        blocks = (reader.load(ns.input)
-                  .join(F.broadcast(work_df), "path", "left_semi"))
-    else:
-        raw = raw.join(F.broadcast(work_df), "path", "left_semi")
-        blocks = split_blocks(raw)
+    work_df = _paths_frame(spark, worklist)
+    blocks = split_blocks(raw.join(F.broadcast(work_df), "path", "left_semi"))
 
     # Observability (reference logs block/event counts, K:114-117, 133,
     # 170): df.observe attaches the metric to the job itself — no
@@ -193,8 +174,15 @@ def run_stream(spark, ns) -> int:
     if not ns.checkpoint:
         print("--stream requires --checkpoint", file=sys.stderr)
         return 2
+    # Batch-only options are refused, not silently dropped.
+    for flag, value in (("--payloads", ns.payloads),
+                        ("--post-url", ns.post_url),
+                        ("--processed-dir", ns.processed_dir)):
+        if value:
+            print(f"{flag} is not supported with --stream", file=sys.stderr)
+            return 2
     streaming_ingest(spark, ns.input, checkpoint=ns.checkpoint,
-                     out_dir=ns.output)
+                     out_dir=ns.output, prefix=ns.prefix)
     return 0
 
 

@@ -1,3 +1,3 @@
-"""Sources: parquet table loaders and the raw shipper-file binary source."""
+"""Sources: parquet table loaders; ``kinesis``: the landing-dir reader."""
 
 from .tables import TABLE_NAMES, load_table, register_views  # noqa: F401

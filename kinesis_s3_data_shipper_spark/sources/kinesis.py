@@ -1,4 +1,4 @@
-"""Kinesis-shaped streaming sources.
+"""Kinesis-shaped sources: the landing-dir reader and a synthetic shard.
 
 OSS Spark has no built-in Kinesis DSv2 connector. The production
 pattern — and exactly what the reference consumes (README.md:5-6:
@@ -31,19 +31,32 @@ BINARY_FILE_SCHEMA = ("path STRING, modificationTime TIMESTAMP,"
                       " length LONG, content BINARY")
 
 
-def firehose_landing_source(spark: SparkSession, landing: str, *,
-                            max_files_per_trigger: int | None = 64,
-                            oldest_first: bool = True) -> DataFrame:
-    """Streaming (path, content) rows from a Firehose-style landing
-    prefix (local dir or s3a:// URI)."""
-    ensure_runtime_confs(spark)
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("latestFirst", str(not oldest_first).lower()))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    return reader.load(landing).select("path", "content")
+def landing_files(reader, landing: str,
+                  prefix: str | None = None) -> DataFrame:
+    """(path, content) rows of every file under a landing prefix (local
+    dir or s3a:// URI), nested dirs included, keeping only paths that
+    start with `prefix` — the one place the landing dir's read is
+    defined. `reader` is ``spark.read`` or ``spark.readStream`` with
+    any source options already set (``maxFilesPerTrigger``,
+    ``latestFirst``); the explicit schema serves both."""
+    raw = (reader.format("binaryFile").schema(BINARY_FILE_SCHEMA)
+           .option("recursiveFileLookup", "true")
+           .load(landing).select("path", "content"))
+    if prefix:
+        raw = raw.filter(F.col("path").startswith(prefix))
+    return raw
+
+
+def listed_paths(raw: DataFrame, prefix: str | None = None) -> list[str]:
+    """Sorted `path` keys of the files a batch `landing_files` frame
+    lists, 0-byte files included (the binaryFile scan drops those).
+    Read from the frame's file index, so no Spark job runs; each URI
+    takes the `path` column's form (``file:/a/b c``, not
+    ``file:///a/b%20c``)."""
+    jvm = raw.sparkSession._jvm
+    Path, URI = jvm.org.apache.hadoop.fs.Path, jvm.java.net.URI
+    paths = (Path(URI(u)).toString() for u in raw.inputFiles())
+    return sorted(p for p in paths if not prefix or p.startswith(prefix))
 
 
 def wrap_ticks_as_blocks(ticks: DataFrame, *,

@@ -63,6 +63,9 @@ def merge(records: list[dict]) -> dict:
             raise ValueError("sessions benched different query sets")
     if any(r.get("incomplete") for r in records):
         raise ValueError("a session had errored queries; fix first")
+    cpus = {r.get("cpus") for r in records}
+    if len(cpus) != 1:
+        raise ValueError(f"sessions ran on different core counts: {cpus}")
     queries = {n: round(min(r["queries"][n] for r in records), 3)
                for n in names}
     # Heavy-tail tier (r12 verdict ask #5): merged identically, kept
@@ -95,10 +98,10 @@ def merge(records: list[dict]) -> dict:
         "session_replaced_runs": [
             r.get("replaced_runs", 0) for r in records],
         "sf": records[0]["sf"],
-        # r14: the per-session effective core count (bench.py now reads
-        # it back from the live SparkContext) rides along so the merged
-        # artifact is self-describing too.
-        "cpus": records[0].get("cpus"),
+        # r14: the effective core count (bench.py reads it back from
+        # the live SparkContext), the same in every session (checked
+        # above), so the merged artifact is self-describing too.
+        "cpus": cpus.pop(),
     }
 
 

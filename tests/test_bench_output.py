@@ -12,6 +12,8 @@ is structurally impossible rather than just currently absent.
 
 import json
 
+import pytest
+
 from bench import HEADLINE, TAIL
 
 # Driver keeps the last ~2,000 chars; leave headroom for a trailing
@@ -106,3 +108,17 @@ def test_tail_full_value_action_defeats_count_join_elimination(spark):
         .alias("h"))
     assert "Join" in optimized(hashed)
     assert full_value(out) == 1
+
+
+def test_session_merge_requires_one_core_count():
+    """The merged bench record stamps one `cpus`; sessions that ran on
+    different core counts cannot be merged into it."""
+    from scripts.bench_sessions import merge
+
+    def session(cpus):
+        return {"metric": "m", "value": 1.0, "queries": {"q": 1.0},
+                "sf": 0.1, "cpus": cpus}
+
+    assert merge([session(4), session(4)])["cpus"] == 4
+    with pytest.raises(ValueError, match="different core counts"):
+        merge([session(4), session(8)])

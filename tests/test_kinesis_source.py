@@ -13,7 +13,7 @@ from kinesis_s3_data_shipper_spark.ingest.pipeline import (
     flatten_events, parse_blocks)
 from kinesis_s3_data_shipper_spark.ingest.splitter import split_blocks
 from kinesis_s3_data_shipper_spark.sources.kinesis import (
-    firehose_landing_source, wrap_ticks_as_blocks)
+    landing_files, wrap_ticks_as_blocks)
 
 
 def test_wrapped_ticks_roundtrip_through_pipeline(spark):
@@ -46,8 +46,8 @@ def test_firehose_source_streams_landing_dir(spark, tmp_path):
     (landing / "a.dat").write_bytes(
         make_raw_file(n_blocks=2, events_per_block=3, gzip_depth=1))
 
-    raw = firehose_landing_source(spark, str(landing),
-                                  max_files_per_trigger=1)
+    raw = landing_files(
+        spark.readStream.option("maxFilesPerTrigger", "1"), str(landing))
     assert raw.isStreaming
     events = flatten_events(parse_blocks(split_blocks(raw)))
     q = (events.writeStream.format("memory").queryName("fh_test")

@@ -11,7 +11,8 @@ import os
 
 import pytest
 
-from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
+from kinesis_s3_data_shipper_spark.ingest.fixture import (fixture_files,
+                                                          make_raw_file)
 from kinesis_s3_data_shipper_spark.shipper import main, redacted
 
 
@@ -23,6 +24,24 @@ def landing(tmp_path):
         path = d / key.replace("/", "__")
         path.write_bytes(blob)
     return str(d)
+
+
+@pytest.fixture()
+def nested_landing(tmp_path):
+    """The fixture keys as-is: every file sits under prefix/raw/."""
+    d = tmp_path / "nested"
+    for key, blob in fixture_files():
+        path = d / key
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(blob)
+    return str(d)
+
+
+def _event_keys(spark, out):
+    """(basename, block_index, event_id) of every shipped event."""
+    return {(os.path.basename(r.file), r.block_index, r.event_id)
+            for r in spark.read.parquet(out)
+            .select("file", "block_index", "event_id").collect()}
 
 
 def test_redaction():
@@ -216,45 +235,105 @@ def test_stream_requires_checkpoint(landing, tmp_path):
                  "--stream"]) == 2
 
 
+@pytest.mark.parametrize("extra", [
+    ["--payloads"], ["--post-url", "http://127.0.0.1:9"],
+    ["--processed-dir", "processed"]],
+    ids=["payloads", "post-url", "processed-dir"])
+def test_stream_rejects_batch_only_options(landing, tmp_path, extra):
+    assert main(["--input", landing, "--output", str(tmp_path / "o"),
+                 "--stream", "--checkpoint", str(tmp_path / "c")]
+                + extra) == 2
+    assert not os.path.exists(tmp_path / "o")
+
+
 def test_stream_run(spark, landing, tmp_path):
     out = str(tmp_path / "stream_out")
     ckpt = str(tmp_path / "ckpt")
     assert main(["--input", landing, "--output", out,
                  "--stream", "--checkpoint", ckpt]) == 0
+    first = _event_keys(spark, out)
     n = spark.read.parquet(out).count()
-    assert n > 0
-    # Re-run with the same checkpoint: no files re-processed.
+    assert n == len(first) > 0
+    # A file landing between two drains on one checkpoint is shipped
+    # exactly once, and no earlier file is re-processed.
+    with open(os.path.join(landing, "late.dat"), "wb") as fh:
+        fh.write(make_raw_file(n_blocks=2, events_per_block=3,
+                               gzip_depth=1))
     assert main(["--input", landing, "--output", out,
                  "--stream", "--checkpoint", ckpt]) == 0
-    assert spark.read.parquet(out).count() == n
+    assert spark.read.parquet(out).count() == n + 6
+    late = _event_keys(spark, out) - first
+    assert {(f, b) for f, b, _ in late} == {("late.dat", 0), ("late.dat", 1)}
 
 
-def test_batch_declarative_matches_imperative(spark, landing, tmp_path,
-                                              capsys):
-    """--declarative (custom DataSource scan) must produce the exact
-    event set of the default binaryFile+splitter path, and keep the
-    tracking/zero-block-warning behavior."""
-    out_imp = str(tmp_path / "ev_imp")
-    out_dec = str(tmp_path / "ev_dec")
-    processed = str(tmp_path / "processed_dec")
+def test_batch_tracks_zero_byte_and_spaced_names(spark, landing, tmp_path,
+                                                  capsys):
+    """Every listed file is warned about or shipped, then recorded under
+    its `path`-column key — a 0-byte file too, although the binaryFile
+    scan drops it, and a name with a space, which the file index
+    URI-encodes."""
+    open(os.path.join(landing, "zero.dat"), "wb").close()
+    with open(os.path.join(landing, "sp ace.dat"), "wb") as fh:
+        fh.write(make_raw_file(n_blocks=1, events_per_block=2,
+                               gzip_depth=1))
+    out = str(tmp_path / "ev")
+    processed = str(tmp_path / "processed")
+    args = ["--input", landing, "--output", out,
+            "--processed-dir", processed]
 
-    assert main(["--input", landing, "--output", out_imp]) == 0
-    assert main(["--input", landing, "--output", out_dec, "--declarative",
-                 "--processed-dir", processed]) == 0
-    err = capsys.readouterr().err
-    assert "warning: 0 message blocks in" in err and "empty.dat" in err
+    assert main(args) == 0
+    assert "warning: 0 message blocks in file:" + os.path.join(
+        landing, "zero.dat") in capsys.readouterr().err
+    recorded = {r.path for r in spark.read.parquet(processed).collect()}
+    assert recorded == {"file:" + os.path.join(landing, n)
+                        for n in os.listdir(landing)}
+    scanned = {r.path for r in spark.read.format("binaryFile")
+               .load(landing).select("path").collect()}
+    assert scanned < recorded
+    spaced = "file:" + os.path.join(landing, "sp ace.dat")
+    assert spaced in scanned
+    assert {r.file for r in spark.read.parquet(out).collect()
+            if r.file.endswith("ace.dat")} == {spaced}
 
-    key = ["file", "block_index", "event_id"]
-
-    def canon(path):
-        return {tuple(os.path.basename(r.file).split("__")[-1:] +
-                      [r.block_index, r.event_id])
-                for r in spark.read.parquet(path).select(*key).collect()}
-
-    got_imp, got_dec = canon(out_imp), canon(out_dec)
-    assert got_dec == got_imp and len(got_dec) > 0
-
-    # Incremental skip works on OS-path tracking keys too.
-    assert main(["--input", landing, "--output", out_dec, "--declarative",
-                 "--processed-dir", processed]) == 0
+    assert main(args) == 0
     assert "nothing to do" in capsys.readouterr().err
+
+
+def test_batch_prefix_filters_listed_path(spark, nested_landing, tmp_path):
+    """--prefix is matched against the listed `path` key (a file: URI
+    here), not against the --input dir."""
+    prefix = "file:" + os.path.join(nested_landing, "prefix/raw/nb1-")
+    out = str(tmp_path / "ev")
+    processed = str(tmp_path / "processed")
+    assert main(["--input", nested_landing, "--output", out,
+                 "--prefix", prefix, "--processed-dir", processed]) == 0
+    names = {f for f, _, _ in _event_keys(spark, out)}
+    want = {os.path.basename(k) for k, _ in fixture_files()
+            if os.path.basename(k).startswith("nb1-")}
+    assert names == want
+    recorded = {r.path for r in spark.read.parquet(processed).collect()}
+    assert recorded == {"file:" + os.path.join(nested_landing, "prefix/raw", n)
+                        for n in want}
+
+
+def test_stream_reads_nested_landing_dir(spark, nested_landing, tmp_path):
+    """--stream sees the files under nested dirs, exactly as batch."""
+    batch_out = str(tmp_path / "batch")
+    stream_out = str(tmp_path / "stream")
+    assert main(["--input", nested_landing, "--output", batch_out]) == 0
+    assert main(["--input", nested_landing, "--output", stream_out,
+                 "--stream", "--checkpoint", str(tmp_path / "ckpt")]) == 0
+    batch = _event_keys(spark, batch_out)
+    assert batch and _event_keys(spark, stream_out) == batch
+
+
+def test_stream_honours_prefix(spark, landing, tmp_path):
+    prefix = "file:" + os.path.join(landing, "prefix__raw__nb1-")
+    out = str(tmp_path / "stream")
+    assert main(["--input", landing, "--output", out, "--prefix", prefix,
+                 "--stream", "--checkpoint", str(tmp_path / "ckpt")]) == 0
+    files = {r.file for r in spark.read.parquet(out).collect()}
+    assert files and all(f.startswith(prefix) for f in files)
+    want = {key.replace("/", "__") for key, _ in fixture_files()
+            if os.path.basename(key).startswith("nb1-")}
+    assert {os.path.basename(f) for f in files} == want

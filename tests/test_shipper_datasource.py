@@ -1,7 +1,8 @@
-"""Tests for the `shipper` custom Python Data Source (PySpark 4
-DataSource API) — the declarative twin of the binaryFile→mapInPandas
-splitter chain. Both paths must yield identical blocks, and the full
-parse→explode pipeline must compose on top of the source unchanged.
+"""Tests for the shipper's one data source, `sources.kinesis
+.landing_files`: the binaryFile read of a landing dir that batch and
+streaming runs share. The splitter on top of it must yield exactly the
+blocks a pure-Python split yields, and the full parse→explode pipeline
+must compose on top of it unchanged.
 """
 
 from __future__ import annotations
@@ -15,14 +16,14 @@ from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
 from kinesis_s3_data_shipper_spark.ingest.pipeline import (flatten_events,
                                                            parse_blocks)
 from kinesis_s3_data_shipper_spark.ingest.splitter import (
-    gunzip_recursive, split_marker_blocks)
-from kinesis_s3_data_shipper_spark.sources.shipper_format import (
-    ShipperDataSource, register)
+    gunzip_recursive, split_blocks, split_marker_blocks)
+from kinesis_s3_data_shipper_spark.sources.kinesis import (landing_files,
+                                                           listed_paths)
 
 
 @pytest.fixture(scope="module")
 def landing_dir(tmp_path_factory):
-    """The fixture matrix written to disk, as a landing directory."""
+    """The fixture matrix written to disk, as a nested landing dir."""
     root = tmp_path_factory.mktemp("landing")
     for key, content in fixture_files():
         dest = root / key
@@ -31,69 +32,58 @@ def landing_dir(tmp_path_factory):
     return str(root)
 
 
-@pytest.fixture(scope="module")
-def shipper_spark(spark):
-    register(spark)
-    return spark
-
-
 def _expected_blocks(landing_dir):
-    """Pure-python reference: every (path, block_index, block)."""
+    """Pure-python reference: every (path key, block_index, block)."""
     out = set()
     for key, content in fixture_files():
-        path = os.path.join(landing_dir, key)
+        path = "file:" + os.path.join(landing_dir, key)
         for i, block in enumerate(
                 split_marker_blocks(gunzip_recursive(content))):
             out.add((path, i, block.decode()))
     return out
 
 
-def test_source_reads_all_blocks(shipper_spark, landing_dir):
-    df = shipper_spark.read.format("shipper").load(landing_dir)
-    assert df.schema.simpleString() == \
-        "struct<path:string,block:string,block_index:int>"
-    got = {(r.path, r.block_index, r.block) for r in df.collect()}
+def test_source_reads_all_blocks(spark, landing_dir):
+    df = landing_files(spark.read, landing_dir)
+    assert df.schema.simpleString() == "struct<path:string,content:binary>"
+    got = {(r.path, r.block_index, r.block)
+           for r in split_blocks(df).collect()}
     assert got == _expected_blocks(landing_dir)
 
 
-def test_source_partitions_per_file(landing_dir):
-    # One InputPartition per file — gzip is non-splittable, so the file
-    # is the parallel unit (same contract as the reference's work list).
-    reader = ShipperDataSource(
-        options={"path": landing_dir}).reader(None)
-    parts = reader.partitions()
-    n_files = sum(len(names) for _, _, names in os.walk(landing_dir))
-    assert len(parts) == n_files
-    assert [p.path for p in parts] == sorted(p.path for p in parts)
+def test_source_partitions_per_file(spark, landing_dir):
+    # One row per file — gzip is non-splittable, so the file is the
+    # unit of work (the reference's work list); the listing walks
+    # nested dirs and returns the `path` column's keys, sorted.
+    raw = landing_files(spark.read, landing_dir)
+    on_disk = sorted("file:" + os.path.join(d, n)
+                     for d, _, names in os.walk(landing_dir) for n in names)
+    assert listed_paths(raw) == on_disk
+    assert sorted(r.path for r in raw.select("path").collect()) == on_disk
 
 
-def test_source_prefix_pushdown(shipper_spark, landing_dir):
-    prefix = os.path.join(landing_dir, "prefix/raw/nb1-")
-    df = (shipper_spark.read.format("shipper")
-          .option("prefix", prefix).load(landing_dir))
-    paths = {r.path for r in df.select("path").distinct().collect()}
-    assert paths  # nb1 matrix cells with ≥1 block
+def test_source_prefix_pushdown(spark, landing_dir):
+    prefix = "file:" + os.path.join(landing_dir, "prefix/raw/nb1-")
+    df = landing_files(spark.read, landing_dir, prefix)
+    paths = {r.path for r in df.select("path").collect()}
+    assert paths  # the nb1 matrix cells
     assert all(p.startswith(prefix) for p in paths)
-    # And the partition planner itself pruned, not just the scan.
-    reader = ShipperDataSource(
-        options={"path": landing_dir, "prefix": prefix}).reader(None)
-    assert all(p.path.startswith(prefix) for p in reader.partitions())
+    assert listed_paths(df, prefix) == sorted(paths)
+    # And the file scan itself pruned, not a filter after reading.
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "StringStartsWith(path," in plan
 
 
-def test_source_empty_dir(shipper_spark, tmp_path):
-    df = shipper_spark.read.format("shipper").load(str(tmp_path))
+def test_source_empty_dir(spark, tmp_path):
+    df = landing_files(spark.read, str(tmp_path))
     assert df.count() == 0
+    assert listed_paths(df) == []
 
 
-def test_source_requires_path():
-    with pytest.raises(ValueError, match="requires a path"):
-        ShipperDataSource(options={}).reader(None)
-
-
-def test_pipeline_composes_on_source(shipper_spark, landing_dir):
-    """parse→explode→enrich runs unchanged on the declarative scan and
-    recovers the exact event set the imperative path recovers."""
-    blocks = shipper_spark.read.format("shipper").load(landing_dir)
+def test_pipeline_composes_on_source(spark, landing_dir):
+    """parse→explode→enrich runs unchanged on the shared read and
+    recovers the exact event set of a pure-Python parse."""
+    blocks = split_blocks(landing_files(spark.read, landing_dir))
     events = flatten_events(parse_blocks(blocks))
     got = {(os.path.basename(r.file), r.block_index, r.event_id)
            for r in events.collect()
@@ -109,14 +99,11 @@ def test_pipeline_composes_on_source(shipper_spark, landing_dir):
     assert got == expect
 
 
-def test_stream_reader_incremental_batches(shipper_spark, tmp_path):
-    """spark.readStream.format("shipper"): run one availableNow drain,
+def test_stream_reader_incremental_batches(spark, tmp_path):
+    """landing_files on spark.readStream: run one availableNow drain,
     drop a new file into the landing dir, drain again on the SAME
     checkpoint — the second run must pick up exactly the new file's
-    blocks (offset log = processed-file state, the reference's SQLite
-    `files` table with exactly-once instead of at-least-once)."""
-    from kinesis_s3_data_shipper_spark.ingest.fixture import fixture_files
-
+    blocks (the file-source checkpoint is the processed-file state)."""
     landing = tmp_path / "landing"
     landing.mkdir()
     fixtures = {os.path.basename(k): v for k, v in fixture_files()
@@ -130,15 +117,14 @@ def test_stream_reader_incremental_batches(shipper_spark, tmp_path):
     def drain():
         # Parquet sink: memory sinks can't recover a checkpoint, and
         # checkpoint recovery across runs is exactly what's under test.
-        q = (shipper_spark.readStream.format("shipper")
-             .load(str(landing))
+        q = (split_blocks(landing_files(spark.readStream, str(landing)))
              .writeStream.format("parquet")
              .option("path", out)
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
         q.awaitTermination()
         return {(os.path.basename(r.path), r.block_index, r.block)
-                for r in shipper_spark.read.parquet(out).collect()}
+                for r in spark.read.parquet(out).collect()}
 
     def expected(*keys):
         return {(k, i, b.decode()) for k in keys for i, b in enumerate(
