@@ -1208,6 +1208,41 @@ CHANGEPOINT_WINDOWED_ORACLE = CHANGEPOINT_ORACLE.replace(
 ), s AS (""", 1)
 
 
+def changepoint_split(series: DataFrame) -> DataFrame:
+    """The best single split of each type's hourly series: ``series``
+    holds (event_type, hrs, ns, L, S) — the sorted hours, their
+    counts, L = len(hrs) >= 2 and S = sum(ns), all LONG — and every
+    prefix k scores S_k^2/k + (S-S_k)^2/(L-k) - S^2/L from exact
+    integer slice sums, argmax by an in-row struct fold with
+    earliest-k tie-break.  Shared by ``events_changepoint_binary`` and
+    its streaming twin, which applies it to its drained (hrs, ns)
+    state, so both score with one expression tree."""
+    sk = "aggregate(slice(ns, 1, k), 0L, (a, x) -> a + x)"
+    cands = series.select(
+        "event_type", "hrs", "L", "S",
+        F.expr(
+            f"transform(sequence(1, CAST(L - 1 AS INT)), k -> named_struct("
+            f"'g', CAST({sk} AS DOUBLE) * {sk} / k"
+            f"   + CAST(S - {sk} AS DOUBLE) * (S - {sk}) / (L - k)"
+            f"   - CAST(S AS DOUBLE) * S / L,"
+            f"'k', CAST(k AS BIGINT),"
+            f"'sk', CAST({sk} AS BIGINT)))").alias("cl"))
+    best = cands.select(
+        "event_type", "hrs", "L", "S",
+        F.expr(
+            "aggregate(cl, named_struct("
+            "'g', CAST('-1e308' AS DOUBLE), 'k', 0L, 'sk', 0L),"
+            "(a, b) -> IF(b.g > a.g, b, a))").alias("b"))
+    return best.select(
+        "event_type", F.col("L").alias("n_hours"),
+        F.expr("element_at(hrs, CAST(b.k AS INT))").alias("split_hr"),
+        F.col("b.k").alias("left_len"),
+        F.round(F.expr("CAST(b.sk AS DOUBLE) / b.k"), 6).alias("left_mean"),
+        F.round(F.expr("CAST(S - b.sk AS DOUBLE) / (L - b.k)"), 6)
+         .alias("right_mean"),
+        F.round(F.col("b.g"), 6).alias("gain"))
+
+
 @register("events_changepoint_binary", oracle=CHANGEPOINT_ORACLE,
     doc="Single change-point detection by binary segmentation over "
          "each type's hourly-rate series — the first split of the "
@@ -1239,30 +1274,7 @@ def events_changepoint_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("event_type", "L", "S",
                  F.expr("transform(a, x -> x.hr)").alias("hrs"),
                  F.expr("transform(a, x -> x.n)").alias("ns")))
-    sk = "aggregate(slice(ns, 1, k), 0L, (a, x) -> a + x)"
-    cands = s.select(
-        "event_type", "hrs", "L", "S",
-        F.expr(
-            f"transform(sequence(1, CAST(L - 1 AS INT)), k -> named_struct("
-            f"'g', CAST({sk} AS DOUBLE) * {sk} / k"
-            f"   + CAST(S - {sk} AS DOUBLE) * (S - {sk}) / (L - k)"
-            f"   - CAST(S AS DOUBLE) * S / L,"
-            f"'k', CAST(k AS BIGINT),"
-            f"'sk', CAST({sk} AS BIGINT)))").alias("cl"))
-    best = cands.select(
-        "event_type", "hrs", "L", "S",
-        F.expr(
-            "aggregate(cl, named_struct("
-            "'g', CAST('-1e308' AS DOUBLE), 'k', 0L, 'sk', 0L),"
-            "(a, b) -> IF(b.g > a.g, b, a))").alias("b"))
-    return best.select(
-        "event_type", F.col("L").alias("n_hours"),
-        F.expr("element_at(hrs, CAST(b.k AS INT))").alias("split_hr"),
-        F.col("b.k").alias("left_len"),
-        F.round(F.expr("CAST(b.sk AS DOUBLE) / b.k"), 6).alias("left_mean"),
-        F.round(F.expr("CAST(S - b.sk AS DOUBLE) / (L - b.k)"), 6)
-         .alias("right_mean"),
-        F.round(F.col("b.g"), 6).alias("gain"))
+    return changepoint_split(s)
 
 
 HOLT_ORACLE = """

@@ -1,7 +1,9 @@
 """Streaming plans — each runs a REAL Structured Streaming query (file
-source → watermark → stateful op → memory sink, drained with
-availableNow) and is oracle-checked against batch SQL over the same
-events table: streaming/batch parity is itself the assertion.
+source → watermark → stateful op, drained with availableNow) and is
+oracle-checked against batch SQL over the same events table:
+streaming/batch parity is itself the assertion.  Windowed and join
+queries read a memory sink; the applyInPandasWithState twins read
+their drained group state from the checkpoint's state store.
 
 - `streaming_hourly`: tumbling event-time window aggregate.
 - `streaming_dedup`: the landing dir holds the events file TWICE;
@@ -14,7 +16,6 @@ from __future__ import annotations
 
 import glob
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,9 +67,7 @@ FROM events GROUP BY 1, 2
          "the batch-SQL oracle — exact streaming/batch parity.")
 def streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"hourly_{uuid.uuid4().hex[:8]}"
-    return streaming_hourly_counts(spark, landing, checkpoint=checkpoint,
-                                   query_name=name)
+    return streaming_hourly_counts(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_sliding", oracle="""
@@ -89,9 +88,7 @@ GROUP BY 1, 2
 def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_sliding_counts
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"slide_{uuid.uuid4().hex[:8]}"
-    return streaming_sliding_counts(spark, landing, checkpoint=checkpoint,
-                                    query_name=name)
+    return streaming_sliding_counts(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_dedup", oracle="""
@@ -104,9 +101,7 @@ FROM events GROUP BY event_type
          "(kinesis-to-humio.py:210-216) at event granularity.")
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing, checkpoint = _stage_landing(sf_dir, copies=2)
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    return streaming_dedup_counts(spark, landing, checkpoint=checkpoint,
-                                  query_name=name)
+    return streaming_dedup_counts(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_sessions", oracle="""
@@ -133,9 +128,7 @@ FROM sessions GROUP BY user_id, sid
          "batch sessionize query's > convention.")
 def streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    return streaming_session_windows(spark, landing, checkpoint=checkpoint,
-                                     query_name=name)
+    return streaming_session_windows(spark, landing, checkpoint=checkpoint)
 
 
 def _stage_split_landing(sf_dir: str) -> tuple[str, str]:
@@ -213,9 +206,7 @@ GROUP BY 1, 2
 def streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_late_data_counts
     landing, checkpoint = _stage_split_landing(sf_dir)
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    return streaming_late_data_counts(spark, landing, checkpoint=checkpoint,
-                                      query_name=name)
+    return streaming_late_data_counts(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_enrich", oracle="""
@@ -232,10 +223,9 @@ def streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import table_path
     from ..streaming.jobs import streaming_enriched_counts
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
     return streaming_enriched_counts(
         spark, landing, table_path(sf_dir, "customer"),
-        checkpoint=checkpoint, query_name=name)
+        checkpoint=checkpoint)
 
 
 @register("streaming_interval_join", oracle="""
@@ -255,8 +245,7 @@ FROM events c JOIN events p
 def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_interval_join as run
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"sjoin_{uuid.uuid4().hex[:8]}"
-    return run(spark, landing, checkpoint=checkpoint, query_name=name)
+    return run(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_outer_join", oracle="""
@@ -281,8 +270,7 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
 def streaming_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_left_outer_join as run
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"sojoin_{uuid.uuid4().hex[:8]}"
-    return run(spark, landing, checkpoint=checkpoint, query_name=name)
+    return run(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_merge", oracle="""
@@ -307,10 +295,9 @@ def streaming_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_incremental_merge
     landing, checkpoint = _stage_landing(sf_dir, copies=2)
     work = os.path.dirname(landing)
-    name = f"smerge_{uuid.uuid4().hex[:8]}"
     return streaming_incremental_merge(
         spark, landing, table_dir=os.path.join(work, "table"),
-        checkpoint=checkpoint, query_name=name, max_files_per_trigger=1)
+        checkpoint=checkpoint, max_files_per_trigger=1)
 
 
 @register("streaming_topk", oracle=f"""
@@ -340,9 +327,7 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
     landing, checkpoint = _stage_landing(sf_dir)
-    name = f"topk_{uuid.uuid4().hex[:8]}"
-    agg = streaming_hourly_counts(spark, landing, checkpoint=checkpoint,
-                                  query_name=name)
+    agg = streaming_hourly_counts(spark, landing, checkpoint=checkpoint)
     w = W.partitionBy("hour_ms").orderBy(F.desc("n"), "event_type")
     return (agg.select("hour_ms", "event_type", "n",
                        F.row_number().over(w).cast("long").alias("rank"))
@@ -426,8 +411,9 @@ def _stage_time_slices(spark: SparkSession, sf_dir: str,
               "the drained state hash-matches the SAME oracle as "
               "events_cusum — streaming/batch parity for a non-linear "
               "recursion no built-in streaming aggregate expresses. "
-              "State per user is one (s, seen) pair; the memory-sink "
-              "read keeps max_by(n_seen), the final emission.")
+              "State per user is one (s, seen) pair, and the answer "
+              "is that state, read from the checkpoint's state store "
+              "after the drain.")
 def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
@@ -441,9 +427,8 @@ def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.sum(F.col("value").cast("decimal(20,6)"))
                      .cast("double").alias("sv"))
                 .filter(F.col("n") >= 4))
-    name = f"cusum_{uuid.uuid4().hex[:8]}"
     return streaming_cusum_final(spark, landing, checkpoint=checkpoint,
-                                 query_name=name, baseline=baseline,
+                                 baseline=baseline,
                                  slack_mult=1.0 + _CUSUM_SLACK)
 
 
@@ -470,9 +455,8 @@ def streaming_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.events import _TB_CAP_UNITS, _TB_REFILL_NS
     from ..streaming.jobs import streaming_rate_limit_final
     landing, checkpoint = _stage_time_slices(sf_dir=sf_dir, spark=spark)
-    name = f"ratelimit_{uuid.uuid4().hex[:8]}"
     return streaming_rate_limit_final(
-        spark, landing, checkpoint=checkpoint, query_name=name,
+        spark, landing, checkpoint=checkpoint,
         cap_units=_TB_CAP_UNITS, cost_units=_TB_REFILL_NS)
 
 
@@ -498,9 +482,8 @@ def streaming_match_recognize(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_match_recognize_final
     landing, checkpoint = _stage_time_slices(sf_dir=sf_dir, spark=spark)
-    name = f"matchrec_{uuid.uuid4().hex[:8]}"
-    return streaming_match_recognize_final(
-        spark, landing, checkpoint=checkpoint, query_name=name)
+    return streaming_match_recognize_final(spark, landing,
+                                           checkpoint=checkpoint)
 
 
 @register("streaming_holt", oracle=HOLT_ORACLE,
@@ -526,9 +509,7 @@ def streaming_match_recognize(spark: SparkSession,
 def streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_holt_final
     landing, checkpoint = _stage_time_slices(sf_dir=sf_dir, spark=spark)
-    name = f"holt_{uuid.uuid4().hex[:8]}"
-    return streaming_holt_final(spark, landing, checkpoint=checkpoint,
-                                query_name=name)
+    return streaming_holt_final(spark, landing, checkpoint=checkpoint)
 
 
 @register("streaming_changepoint", oracle=CHANGEPOINT_ORACLE,
@@ -538,10 +519,10 @@ def streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
               "machine), sharing its oracle text exactly as the "
               "CUSUM/rate-limit/MATCH_RECOGNIZE/Holt twins share "
               "theirs: per-type (hour -> count) histogram kept as "
-              "ARRAY group state across micro-batches, the current "
-              "best split re-scored and emitted every batch via the "
-              "batch plan's IEEE gain tree and earliest-k argmax "
-              "verbatim.  Hourly counts are exact integers and "
+              "ARRAY group state across micro-batches, the best "
+              "split scored on the drained state with the batch "
+              "plan's own split expression (gain tree and earliest-k "
+              "argmax).  Hourly counts are exact integers and "
               "addition commutes, so slicing cannot perturb the "
               "histogram and the drained state hash-matches the batch "
               "oracle bit-for-bit.  State is O(stream HOURS) per type "
@@ -554,10 +535,8 @@ def streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_changepoint_final
     landing, checkpoint = _stage_time_slices(sf_dir=sf_dir, spark=spark)
-    name = f"chgpt_{uuid.uuid4().hex[:8]}"
     return streaming_changepoint_final(spark, landing,
-                                       checkpoint=checkpoint,
-                                       query_name=name)
+                                       checkpoint=checkpoint)
 
 
 @register("streaming_changepoint_windowed",
@@ -581,7 +560,6 @@ def streaming_changepoint_windowed(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     from ..streaming.jobs import streaming_changepoint_final
     landing, checkpoint = _stage_time_slices(sf_dir=sf_dir, spark=spark)
-    name = f"chgptw_{uuid.uuid4().hex[:8]}"
     return streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint, query_name=name,
+        spark, landing, checkpoint=checkpoint,
         window_hours=CHANGEPOINT_WINDOW_HOURS)

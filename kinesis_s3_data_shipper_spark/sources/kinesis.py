@@ -1,4 +1,4 @@
-"""Kinesis-shaped sources: the landing-dir reader and a synthetic shard.
+"""Kinesis-shaped sources: the landing-dir reader and synthetic blocks.
 
 OSS Spark has no built-in Kinesis DSv2 connector. The production
 pattern — and exactly what the reference consumes (README.md:5-6:
@@ -13,19 +13,15 @@ landing prefix**:
   ``--humio-batch`` analog at the file level);
 - ``latestFirst=false`` preserves oldest-first ordering (K:292).
 
-For integration tests and demos without any object store, the ``rate``
-source emulates a shard: a fixed rows/sec stream whose rows this
-module wraps into the same DATA_MESSAGE JSON the splitter consumes —
-so the whole ingest pipeline can run against a purely synthetic
-"stream" end to end.
+For tests without any object store, :func:`wrap_ticks_as_blocks`
+wraps (value, timestamp) rows into the same DATA_MESSAGE JSON the
+splitter consumes, so the ingest pipeline can run on synthetic input.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..session import ensure_runtime_confs
 
 BINARY_FILE_SCHEMA = ("path STRING, modificationTime TIMESTAMP,"
                       " length LONG, content BINARY")
@@ -67,8 +63,7 @@ def wrap_ticks_as_blocks(ticks: DataFrame, *,
     `events_per_block` consecutive values become one block.
 
     Pure JVM expressions (to_json over structs) — the emulator adds no
-    Python cost, and the same transformation works on a batch frame
-    (tests) or the streaming ``rate`` source (demos).
+    Python cost.
     """
     block_id = F.expr(f"value div {events_per_block}")
     event = F.struct(
@@ -91,15 +86,3 @@ def wrap_ticks_as_blocks(ticks: DataFrame, *,
                     F.array(F.lit("synthetic")).alias("subscriptionFilters"),
                     F.col("logEvents"))), "UTF-8").alias("content")))
 
-
-def rate_shard_source(spark: SparkSession, *, rows_per_second: int = 100,
-                      log_group: str = "/synthetic/rate",
-                      events_per_block: int = 10) -> DataFrame:
-    """A synthetic Kinesis shard: the streaming ``rate`` source wrapped
-    into splitter-consumable blocks (update/complete sinks only — the
-    wrap aggregates without a watermark)."""
-    ensure_runtime_confs(spark)
-    rate = (spark.readStream.format("rate")
-            .option("rowsPerSecond", str(rows_per_second)).load())
-    return wrap_ticks_as_blocks(rate, log_group=log_group,
-                                events_per_block=events_per_block)

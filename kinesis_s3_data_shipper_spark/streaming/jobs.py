@@ -16,10 +16,10 @@ tests, and identically as continuous micro-batch jobs in production.
 
 from __future__ import annotations
 
-import contextlib
 import datetime
 import glob
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,66 +105,90 @@ def _events_stream(spark: SparkSession, events_dir: str,
 #: explicit (ts, event_id) sort inside each update function — so the
 #: partition count can change parallelism and store-file counts, never
 #: values (the oracle gate re-attests this per round).
-#: KNOWN SIDE EFFECT of the drain-wide pin: batch jobs launched INSIDE
-#: a ``foreachBatch`` body run under the same session conf, so their
+#: Side effect of the drain-wide pin: batch jobs launched INSIDE a
+#: ``foreachBatch`` body run under the same session conf, so their
 #: shuffles (the incremental-merge sink's groupBy + bucketed writes,
 #: the ingest sink's dynamic-overwrite writes) are also capped at
 #: :data:`STATE_PARTITIONS` during the drain.  At this repo's fixture
-#: sizes that cap is a WIN (micro-batches are tiny; fewer tasks =
-#: lower floor), so the default inherits the pin.  At 100 TB the two
-#: knobs diverge — state volume does not track per-batch compute
-#: volume — so shuffling sinks route through
-#: :func:`_batch_shuffle_scope`, and a deployment sets
-#: ``SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS`` to size batch
-#: compute independently of the state-store count (which stays
-#: checkpoint-pinned from the first batch regardless of later conf).
-STATE_PARTITIONS = int(os.environ.get(
-    "SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-
-_BATCH_SINK_PARTITIONS: str | None = os.environ.get(
-    "SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS")
+#: sizes that cap is a win (micro-batches are tiny; fewer tasks =
+#: lower floor); SCALE.md records where the two knobs diverge.
+STATE_PARTITIONS = 8
 
 
-@contextlib.contextmanager
-def _batch_shuffle_scope(spark: SparkSession):
-    """Inside a ``foreachBatch`` body: lift the drain's state-volume
-    shuffle pin to the deployment's batch-compute value for the
-    duration of the batch work, restoring the pin before the next
-    micro-batch plans.  No-op unless
-    ``SPARK_GRAFT_STREAM_BATCH_SHUFFLE_PARTITIONS`` is set — the
-    stateful plan's state-store count is immune either way (recorded
-    in the checkpoint at the first batch), this only affects the batch
-    job's own shuffles."""
-    if _BATCH_SINK_PARTITIONS is None:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _BATCH_SINK_PARTITIONS)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+def _drain(df: DataFrame, checkpoint: str, *, mode: str = "append",
+           sink=None) -> DataFrame | None:
+    """Run streaming ``df`` to completion under
+    ``trigger(availableNow=True)`` on ``checkpoint`` — the one place a
+    stream writer is built.  ``sink`` picks one of three sinks:
 
+    - ``None``: an in-memory table under a fresh name, returned as a
+      DataFrame (the windowed, join and TWS jobs);
+    - ``"noop"``: the output is discarded, because the stateful jobs'
+      answer is their group state, read back by :func:`_fold_state`;
+    - a ``foreachBatch`` function (ingest, incremental merge).
 
-def _drain(spark: SparkSession, writer):
-    """Start a fully-configured DataStreamWriter and drain it to
-    completion with ``spark.sql.shuffle.partitions`` pinned to
-    :data:`STATE_PARTITIONS` (micro-batch planning happens inside
-    ``awaitTermination``, so the pin must cover the whole drain, not
-    just ``start()``).  Restores the session conf even on failure.
-    Returns the finished StreamingQuery."""
+    ``spark.sql.shuffle.partitions`` is pinned to
+    :data:`STATE_PARTITIONS` for the whole drain (micro-batch planning
+    happens inside ``awaitTermination``, not just ``start()``) and
+    restored even on failure."""
+    spark = df.sparkSession
+    writer = (df.writeStream.outputMode(mode)
+              .option("checkpointLocation", checkpoint)
+              .trigger(availableNow=True))
+    table = None
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    elif sink == "noop":
+        writer = writer.format("noop")
+    else:
+        table = f"drain_{uuid.uuid4().hex[:8]}"
+        writer = writer.format("memory").queryName(table)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
-        query = writer.start()
-        query.awaitTermination()
-        return query
+        writer.start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+    return None if table is None else spark.table(table)
+
+
+def _fold_state(events: DataFrame, key: str, *, state: str, init: tuple,
+                fold, checkpoint: str) -> DataFrame:
+    """Fold each ``key`` group's rows into explicit group state
+    (applyInPandasWithState) across micro-batches, and return the
+    state the drain leaves behind: one row per key, the key column
+    then the fields of the ``state`` DDL.
+
+    ``fold(pdf, st) -> st`` sees one micro-batch's rows of one key,
+    sorted by (ts, event_id), and the key's state tuple (``init``
+    before its first row).  Nothing is emitted per batch: the job
+    drains into ``noop`` and the answer is read from the checkpoint's
+    state store at the last committed batch — the checkpoint is this
+    engine's progress store (the reference's SQLite, K:48-68), so a
+    stopped job resumed on the same checkpoint folds only the new
+    files onto the restored state, and the read stays current."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    def update(_key, pdfs, group: GroupState):
+        pdf = pd.concat(list(pdfs), ignore_index=True)
+        pdf = pdf.sort_values(["ts", "event_id"])
+        group.update(fold(pdf, group.get if group.exists else init))
+        return iter(())
+
+    folded = events.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=events.select(key).schema,
+        stateStructType=state,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout)
+    _drain(folded, checkpoint, mode="update", sink="noop")
+    return (events.sparkSession.read.format("statestore").load(checkpoint)
+            .select(f"key.{key}", "value.groupState.*"))
 
 
 def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
-                            checkpoint: str, query_name: str,
+                            checkpoint: str,
                             watermark: str = "1 hour") -> DataFrame:
     """Event-time tumbling 1-hour aggregate with a watermark; complete
     mode into an in-memory table; returns the result when drained.
@@ -184,15 +208,11 @@ def streaming_hourly_counts(spark: SparkSession, events_dir: str, *,
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("hour_ms"),
         "event_type", "n", "sum_value")
-    query = _drain(spark, out.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(out, checkpoint, mode="complete")
 
 
 def streaming_sliding_counts(spark: SparkSession, events_dir: str, *,
-                             checkpoint: str, query_name: str,
+                             checkpoint: str,
                              watermark: str = "1 hour") -> DataFrame:
     """Event-time SLIDING (hopping) 1-hour window, 30-minute slide:
     every event lands in exactly two overlapping windows. Complete
@@ -215,15 +235,11 @@ def streaming_sliding_counts(spark: SparkSession, events_dir: str, *,
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("win_ms"),
         "event_type", "n", "sum_value")
-    query = _drain(spark, out.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(out, checkpoint, mode="complete")
 
 
 def streaming_dedup_counts(spark: SparkSession, events_dir: str, *,
-                           checkpoint: str, query_name: str,
+                           checkpoint: str,
                            watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup on event_id within the watermark — the
     streaming twin of dedup_exact (dropDuplicatesWithinWatermark bounds
@@ -235,11 +251,7 @@ def streaming_dedup_counts(spark: SparkSession, events_dir: str, *,
         .withWatermark("event_time", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
         .groupBy("event_type").agg(F.count("*").alias("n")))
-    query = _drain(spark, deduped.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(deduped, checkpoint, mode="complete")
 
 
 #: Sentinel event time far past any test data (2100-01-01, epoch-nanos).
@@ -252,7 +264,7 @@ SENTINEL_USER = -1
 
 
 def streaming_session_windows(spark: SparkSession, events_dir: str, *,
-                              checkpoint: str, query_name: str,
+                              checkpoint: str,
                               gap: str = "30 minutes") -> DataFrame:
     """session_window gap-based sessions per user, append mode.
 
@@ -274,17 +286,13 @@ def streaming_session_windows(spark: SparkSession, events_dir: str, *,
         .agg(F.count("*").alias("n_events"))
         .select("user_id", "n_events",
                 F.unix_millis(F.col("session_window.start")).alias("start_ms")))
-    query = _drain(spark, sessions.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name).filter(F.col("user_id") != SENTINEL_USER)
+    return (_drain(sessions, checkpoint)
+            .filter(F.col("user_id") != SENTINEL_USER))
 
 
 def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
-                          checkpoint: str, query_name: str,
-                          baseline: DataFrame, slack_mult: float,
-                          output_dir: str | None = None) -> DataFrame:
+                          checkpoint: str, baseline: DataFrame,
+                          slack_mult: float) -> DataFrame:
     """Per-user one-sided CUSUM drift detector maintained ACROSS
     micro-batches in explicit group state (applyInPandasWithState) —
     the streaming counterpart of the batch ``events_cusum`` plan, and
@@ -309,110 +317,45 @@ def streaming_cusum_final(spark: SparkSession, events_dir: str, *,
     DuckDB folds (scalar Python floats, never float32), so the final
     statistic matches bit-for-bit before the shared round(6).
 
-    Emits (user_id, n_seen, s_last) per batch a user appears in;
-    ``n_seen`` is monotone, so the final state row is the max_by —
-    state never grows beyond one (s, seen) pair per user.
-
-    Sinks: by default the update-mode MEMORY sink (light, but Spark
-    refuses to resume a memory-sink query from an existing
-    checkpoint). Pass ``output_dir`` to switch to a foreachBatch
-    parquet-append sink, which IS checkpoint-recoverable: a stopped
-    query restarted with the same checkpoint continues folding the
-    restored state over only the new files, and the parquet dir
-    accumulates every emission across runs, so the max_by read below
-    yields the up-to-date statistic for ALL users (the restart test's
-    subject, tests/test_stateful_streaming.py).
+    The answer is the drained ``(s, seen)`` state itself, read from
+    the checkpoint (:func:`_fold_state`): one pair per user, and a
+    stopped job resumed on the same checkpoint continues from it.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     events = _events_stream(spark, events_dir, max_files=1)
     enriched = events.join(F.broadcast(baseline), "user_id")
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        (s, seen) = state.get if state.exists else (0.0, 0)
+    def fold(pdf, st):
+        s, seen = st
         for x, sv, n in zip(pdf["value"], pdf["sv"], pdf["n"]):
             s = max(0.0, s + (float(x) - (float(sv) / int(n)) * slack_mult))
-            seen += 1
-        state.update((s, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "s_last": [s]})
+        return s, seen + len(pdf)
 
-    out = (enriched.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, n_seen LONG, s_last DOUBLE",
-        stateStructType="s DOUBLE, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
-    return (emissions
-            .groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("s_last", "n_seen").alias("s_final"))
-            .select("user_id", "n_events",
-                    F.round("s_final", 6).alias("cusum_final")))
+    state = _fold_state(enriched, "user_id", state="s DOUBLE, seen LONG",
+                        init=(0.0, 0), fold=fold, checkpoint=checkpoint)
+    return state.select("user_id", F.col("seen").alias("n_events"),
+                        F.round("s", 6).alias("cusum_final"))
 
 
 def streaming_running_user_counts(spark: SparkSession, events_dir: str, *,
-                                  checkpoint: str, query_name: str,
+                                  checkpoint: str,
                                   max_files_per_trigger: int = 1) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: a per-user
     running event counter carried across micro-batches in explicit
     group state (the surface for stateful logic that session_window /
     dropDuplicates can't express — e.g. CEP-ish accumulators).
 
-    Emits (user_id, total) on every batch a user appears in; the final
-    emission per user equals the batch groupBy count, which is what the
-    unit test asserts. RocksDB-backed state (session default)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    The drained state per user equals the batch groupBy count, which
+    is what the unit test asserts. RocksDB-backed state (session
+    default)."""
     events = _events_stream(spark, events_dir,
                             max_files=max_files_per_trigger)
-
-    def update(key, pdfs, state: GroupState):
-        n = 0
-        for pdf in pdfs:
-            n += len(pdf)
-        (prev,) = state.get if state.exists else (0,)
-        total = prev + n
-        state.update((total,))
-        yield pd.DataFrame({"user_id": [key[0]], "total": [total]})
-
-    counted = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, total LONG",
-        stateStructType="total LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, counted.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    # Update-mode memory sink keeps every emission; the running maximum
-    # per user IS the final total (totals are monotone).
-    return (spark.table(query_name)
-            .groupBy("user_id").agg(F.max("total").alias("total")))
+    return _fold_state(events, "user_id", state="total LONG", init=(0,),
+                       fold=lambda pdf, st: (st[0] + len(pdf),),
+                       checkpoint=checkpoint)
 
 
 def streaming_late_data_counts(spark: SparkSession, events_dir: str, *,
-                               checkpoint: str, query_name: str,
+                               checkpoint: str,
                                watermark: str = "2 hours") -> DataFrame:
     """Hourly counts in APPEND mode with real late-data semantics.
 
@@ -434,15 +377,25 @@ def streaming_late_data_counts(spark: SparkSession, events_dir: str, *,
     out = agg.select(
         F.unix_millis(F.col("window.start")).alias("hour_ms"),
         "event_type", "n")
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(out, checkpoint)
+
+
+def _watermarked_side(spark: SparkSession, events_dir: str,
+                      event_type: str, id_alias: str, time_alias: str,
+                      user_alias: str) -> DataFrame:
+    """One side of the click/purchase interval joins: the events of one
+    type as (id, user, event time), watermarked 1 hour."""
+    stream = _events_stream(spark, events_dir)
+    return (stream
+            .filter(F.col("event_type") == event_type)
+            .select(F.col("event_id").alias(id_alias),
+                    F.col("user_id").alias(user_alias),
+                    _event_time(stream).alias(time_alias))
+            .withWatermark(time_alias, "1 hour"))
 
 
 def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
-                              checkpoint: str, query_name: str,
+                              checkpoint: str,
                               window: str = "30 minutes") -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every click emits — with
     its matching same-user purchases inside [click, click + window],
@@ -463,18 +416,10 @@ def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
                              [(-2, "click"), (-3, "purchase")])
     sentinels.write.mode("append").parquet(events_dir)
 
-    def side(event_type: str, id_alias: str, time_alias: str,
-             user_alias: str) -> DataFrame:
-        stream = _events_stream(spark, events_dir)
-        return (stream
-                .filter(F.col("event_type") == event_type)
-                .select(F.col("event_id").alias(id_alias),
-                        F.col("user_id").alias(user_alias),
-                        _event_time(stream).alias(time_alias))
-                .withWatermark(time_alias, "1 hour"))
-
-    clicks = side("click", "click_id", "click_time", "user_id")
-    purchases = side("purchase", "purchase_id", "purchase_time", "p_user")
+    clicks = _watermarked_side(spark, events_dir, "click", "click_id",
+                               "click_time", "user_id")
+    purchases = _watermarked_side(spark, events_dir, "purchase",
+                                  "purchase_id", "purchase_time", "p_user")
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
@@ -486,11 +431,8 @@ def streaming_left_outer_join(spark: SparkSession, events_dir: str, *,
         "user_id", "click_id", "purchase_id",
         (F.unix_millis("purchase_time") - F.unix_millis("click_time"))
         .alias("lag_ms"))
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name).filter(F.col("user_id") != SENTINEL_USER)
+    return (_drain(out, checkpoint)
+            .filter(F.col("user_id") != SENTINEL_USER))
 
 
 def streaming_ingest(spark: SparkSession, landing_dir: str, *,
@@ -512,28 +454,25 @@ def streaming_ingest(spark: SparkSession, landing_dir: str, *,
         landing_dir, prefix)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        with _batch_shuffle_scope(spark):
-            events = flatten_events(parse_blocks(split_blocks(batch_df)))
-            # Idempotent sink: each epoch OVERWRITES its own partition
-            # directory, so a retried/replayed epoch rewrites the same
-            # data instead of appending a duplicate copy — exactly-once
-            # output on top of the checkpoint's exactly-once input,
-            # fixing the reference's lost/duplicated-batch flaw
-            # (SURVEY §3).
-            (events.withColumn("_epoch", F.lit(epoch_id))
-             .write.mode("overwrite")
-             .partitionBy("_epoch")
-             .option("partitionOverwriteMode", "dynamic")
-             .parquet(out_dir))
+        events = flatten_events(parse_blocks(split_blocks(batch_df)))
+        # Idempotent sink: each epoch OVERWRITES its own partition
+        # directory, so a retried/replayed epoch rewrites the same
+        # data instead of appending a duplicate copy — exactly-once
+        # output on top of the checkpoint's exactly-once input,
+        # fixing the reference's lost/duplicated-batch flaw
+        # (SURVEY §3).
+        (events.withColumn("_epoch", F.lit(epoch_id))
+         .write.mode("overwrite")
+         .partitionBy("_epoch")
+         .option("partitionOverwriteMode", "dynamic")
+         .parquet(out_dir))
 
-    query = _drain(spark, raw.writeStream.foreachBatch(process)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
+    _drain(raw, checkpoint, sink=process)
 
 
 def streaming_enriched_counts(spark: SparkSession, events_dir: str,
-                              customer_path: str, *, checkpoint: str,
-                              query_name: str) -> DataFrame:
+                              customer_path: str, *,
+                              checkpoint: str) -> DataFrame:
     """Stream-static enrichment join: the event stream joins the static
     customer dimension (re-read each micro-batch, broadcast — the
     standard streaming enrichment pattern), then aggregates per
@@ -549,15 +488,11 @@ def streaming_enriched_counts(spark: SparkSession, events_dir: str,
         .agg(F.count("*").alias("n"),
              F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
               .alias("sum_value")))
-    query = _drain(spark, enriched.writeStream.outputMode("complete")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(enriched, checkpoint, mode="complete")
 
 
 def streaming_interval_join(spark: SparkSession, events_dir: str, *,
-                            checkpoint: str, query_name: str,
+                            checkpoint: str,
                             window: str = "30 minutes") -> DataFrame:
     """Stream-stream inner join with an event-time interval condition:
     each click joins the purchases of the same user landing within
@@ -567,18 +502,10 @@ def streaming_interval_join(spark: SparkSession, events_dir: str, *,
     scale (vs buffering either stream forever). Inner join => matches
     emit as found; availableNow drains the full fixture
     deterministically."""
-    def side(event_type: str, id_alias: str, time_alias: str,
-             user_alias: str) -> DataFrame:
-        stream = _events_stream(spark, events_dir)
-        return (stream
-                .filter(F.col("event_type") == event_type)
-                .select(F.col("event_id").alias(id_alias),
-                        F.col("user_id").alias(user_alias),
-                        _event_time(stream).alias(time_alias))
-                .withWatermark(time_alias, "1 hour"))
-
-    clicks = side("click", "click_id", "click_time", "user_id")
-    purchases = side("purchase", "purchase_id", "purchase_time", "p_user")
+    clicks = _watermarked_side(spark, events_dir, "click", "click_id",
+                               "click_time", "user_id")
+    purchases = _watermarked_side(spark, events_dir, "purchase",
+                                  "purchase_id", "purchase_time", "p_user")
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user"))
@@ -589,11 +516,7 @@ def streaming_interval_join(spark: SparkSession, events_dir: str, *,
         "user_id", "click_id", "purchase_id",
         (F.unix_millis("purchase_time") - F.unix_millis("click_time"))
         .alias("lag_ms"))
-    query = _drain(spark, out.writeStream.outputMode("append")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    return spark.table(query_name)
+    return _drain(out, checkpoint)
 
 
 def tws_available() -> bool:
@@ -610,7 +533,7 @@ def tws_available() -> bool:
 
 
 def streaming_user_stats_tws(spark: SparkSession, events_dir: str, *,
-                             checkpoint: str, query_name: str,
+                             checkpoint: str,
                              max_files_per_trigger: int = 1) -> DataFrame:
     """Per-user running (count, exact sum) via transformWithStateInPandas
     — the Spark 4 arbitrary-stateful API (StatefulProcessor + typed
@@ -670,13 +593,9 @@ def streaming_user_stats_tws(spark: SparkSession, events_dir: str, *,
         outputStructType="user_id LONG, n LONG, sum_micros LONG",
         outputMode="Update",
         timeMode="None")
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
     # Update-mode memory sink keeps every emission; n is strictly
     # monotone per user, so max(struct(n, sum)) is the final state.
-    final = (spark.table(query_name)
+    final = (_drain(out, checkpoint, mode="update")
              .groupBy("user_id")
              .agg(F.max(F.struct("n", "sum_micros")).alias("_f")))
     return final.select(
@@ -790,7 +709,6 @@ def read_bucketed_table(spark: SparkSession, table_dir: str) -> DataFrame:
 
 def streaming_incremental_merge(spark: SparkSession, events_dir: str, *,
                                 table_dir: str, checkpoint: str,
-                                query_name: str,
                                 max_files_per_trigger: int = 1,
                                 num_buckets: int = MERGE_BUCKETS,
                                 vacuum_keep: int | None = None) -> DataFrame:
@@ -816,33 +734,25 @@ def streaming_incremental_merge(spark: SparkSession, events_dir: str, *,
                             max_files=max_files_per_trigger)
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        with _batch_shuffle_scope(spark):
-            delta = (batch_df
-                     .select("user_id",
-                             (F.col("value").cast("decimal(18,6)")
-                              * 1_000_000)
-                             .cast("long").alias("vm"))
-                     .groupBy("user_id")
-                     .agg(F.count("*").alias("d_n"),
-                          F.sum("vm").alias("d_sum")))
-            merge_delta_into_bucketed_table(spark, delta, batch_id,
-                                            table_dir,
-                                            num_buckets=num_buckets)
-            if vacuum_keep is not None:
-                from ..operators.maintenance import vacuum_versions
-                vacuum_versions(table_dir, keep=vacuum_keep)
+        delta = (batch_df
+                 .select("user_id",
+                         (F.col("value").cast("decimal(18,6)") * 1_000_000)
+                         .cast("long").alias("vm"))
+                 .groupBy("user_id")
+                 .agg(F.count("*").alias("d_n"), F.sum("vm").alias("d_sum")))
+        merge_delta_into_bucketed_table(spark, delta, batch_id, table_dir,
+                                        num_buckets=num_buckets)
+        if vacuum_keep is not None:
+            from ..operators.maintenance import vacuum_versions
+            vacuum_versions(table_dir, keep=vacuum_keep)
 
-    query = _drain(spark, events.writeStream.foreachBatch(merge_batch)
-             .queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
+    _drain(events, checkpoint, sink=merge_batch)
     return read_bucketed_table(spark, table_dir)
 
 
 def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
-                               checkpoint: str, query_name: str,
-                               cap_units: int, cost_units: int,
-                               output_dir: str | None = None) -> DataFrame:
+                               checkpoint: str, cap_units: int,
+                               cost_units: int) -> DataFrame:
     """Per-user token-bucket admission control maintained ACROSS
     micro-batches in explicit group state — the streaming counterpart
     of the batch ``events_rate_limit`` plan, and (like the CUSUM twin
@@ -864,27 +774,16 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
     the landing dir as ts-range slices with increasing mtimes +
     ``maxFilesPerTrigger=1`` (the streaming_cusum staging contract),
     and last_ts carries the inter-arrival delta ACROSS the batch
-    boundary. Emits (user_id, n_seen, admitted, level) per batch a
-    user appears in; n_seen is monotone so the final state row is the
-    max_by.
+    boundary.
 
-    Sinks mirror streaming_cusum_final: memory sink by default; pass
-    ``output_dir`` for the checkpoint-recoverable foreachBatch parquet
-    sink (a stopped query restarted with the same checkpoint resumes
-    the restored (level, admitted, last_ts, seen) state over only the
-    new files — the restart test's subject)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    Like every applyInPandasWithState twin, the answer is the drained
+    state read from the checkpoint (:func:`_fold_state`), so a stopped
+    job resumed on the same checkpoint continues from the restored
+    (level, admitted, last_ts, seen) over only the new files."""
     events = _events_stream(spark, events_dir, max_files=1)
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            level, admitted, last_ts, seen = state.get
-        else:
-            level, admitted, last_ts, seen = 0, 0, None, 0
+    def fold(pdf, st):
+        level, admitted, last_ts, seen = st
         for t in pdf["ts"]:
             t = int(t)
             dt = cap_units if last_ts is None else t - last_ts
@@ -893,49 +792,22 @@ def streaming_rate_limit_final(spark: SparkSession, events_dir: str, *,
                 admitted += 1
                 level -= cost_units
             last_ts = t
-            seen += 1
-        state.update((level, admitted, last_ts, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "admitted": [admitted], "level": [level]})
+        return level, admitted, last_ts, seen + len(pdf)
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=("user_id LONG, n_seen LONG, admitted LONG,"
-                          " level LONG"),
-        stateStructType=("level LONG, admitted LONG, last_ts LONG,"
-                         " seen LONG"),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
-    return (emissions
-            .groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("admitted", "n_seen").alias("n_admitted"),
-                 F.max_by("level", "n_seen").alias("level_final_units"))
-            .select("user_id", "n_events", "n_admitted",
-                    (F.col("n_events") - F.col("n_admitted"))
-                    .alias("n_rejected"),
-                    "level_final_units"))
+    state = _fold_state(
+        events, "user_id",
+        state="level LONG, admitted LONG, last_ts LONG, seen LONG",
+        init=(0, 0, None, 0), fold=fold, checkpoint=checkpoint)
+    return state.select(
+        "user_id", F.col("seen").alias("n_events"),
+        F.col("admitted").alias("n_admitted"),
+        (F.col("seen") - F.col("admitted")).alias("n_rejected"),
+        F.col("level").alias("level_final_units"))
 
 
 def streaming_match_recognize_final(spark: SparkSession,
                                     events_dir: str, *,
-                                    checkpoint: str,
-                                    query_name: str) -> DataFrame:
+                                    checkpoint: str) -> DataFrame:
     """Per-user MATCH_RECOGNIZE (pattern CLICK VIEW+ PURCHASE, skip
     past last row) maintained ACROSS micro-batches in explicit group
     state — the streaming counterpart of the batch
@@ -954,19 +826,11 @@ def streaming_match_recognize_final(spark: SparkSession,
     A half-open match (fsm_state != 0) carries across the batch
     boundary by construction — the property batch re-runs get for
     free and naive per-batch matching silently breaks."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     events = _events_stream(spark, events_dir, max_files=1)
     codes = {"click": 1, "view": 2, "purchase": 3}
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            matches, fsm, seen = state.get
-        else:
-            matches, fsm, seen = 0, 0, 0
+    def fold(pdf, st):
+        matches, fsm, seen = st
         for et in pdf["event_type"]:
             x = codes.get(et, 0)
             if x == 1:
@@ -978,32 +842,18 @@ def streaming_match_recognize_final(spark: SparkSession,
                 fsm = 0
             else:
                 fsm = 0
-            seen += 1
-        state.update((matches, fsm, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "n_matches": [matches], "fsm": [fsm]})
+        return matches, fsm, seen + len(pdf)
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=("user_id LONG, n_seen LONG, n_matches LONG,"
-                          " fsm LONG"),
-        stateStructType="matches LONG, fsm LONG, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    emissions = spark.table(query_name)
-    return (emissions.groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("n_matches", "n_seen").alias("n_matches"),
-                 F.max_by("fsm", "n_seen").alias("final_state"))
-            .select("user_id", "n_events", "n_matches", "final_state"))
+    state = _fold_state(events, "user_id",
+                        state="matches LONG, fsm LONG, seen LONG",
+                        init=(0, 0, 0), fold=fold, checkpoint=checkpoint)
+    return state.select("user_id", F.col("seen").alias("n_events"),
+                        F.col("matches").alias("n_matches"),
+                        F.col("fsm").alias("final_state"))
 
 
 def streaming_holt_final(spark: SparkSession, events_dir: str, *,
-                         checkpoint: str, query_name: str) -> DataFrame:
+                         checkpoint: str) -> DataFrame:
     """Per-user Holt linear-trend smoothing maintained ACROSS
     micro-batches in explicit group state — the streaming counterpart
     of the batch ``events_holt_step`` plan (the forecasting SERVING
@@ -1021,7 +871,7 @@ def streaming_holt_final(spark: SparkSession, events_dir: str, *,
     batch plan's in-row fold and the oracle's recursive CTE (dyadic
     coefficients: exact binary multiplies; Python floats ARE IEEE
     doubles, so the drained state is bit-identical, and the final
-    round(6) runs JVM-side on the emitted doubles exactly as the
+    round(6) runs JVM-side on the drained doubles exactly as the
     batch plan's does).
 
     EXACT batch parity requires the cross-batch fold order to equal
@@ -1030,18 +880,10 @@ def streaming_holt_final(spark: SparkSession, events_dir: str, *,
     ``maxFilesPerTrigger=1`` (the streaming_cusum staging contract).
     The batch plan's n >= 4 floor is applied on the DRAINED state
     (a stream can't know a user's final count mid-flight)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     events = _events_stream(spark, events_dir, max_files=1)
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        if state.exists:
-            x1, l, b, seen = state.get
-        else:
-            x1, l, b, seen = 0.0, 0.0, 0.0, 0
+    def fold(pdf, st):
+        x1, l, b, seen = st
         for v in pdf["value"]:
             x = float(v)
             if seen == 0:
@@ -1053,45 +895,31 @@ def streaming_holt_final(spark: SparkSession, events_dir: str, *,
                 b = 0.25 * (l2 - l) + 0.75 * b
                 l = l2
             seen += 1
-        state.update((x1, l, b, seen))
-        yield pd.DataFrame({"user_id": [key[0]], "n_seen": [seen],
-                            "l": [l], "b": [b]})
+        return x1, l, b, seen
 
-    out = (events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id LONG, n_seen LONG, l DOUBLE, b DOUBLE",
-        stateStructType="x1 DOUBLE, l DOUBLE, b DOUBLE, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    query = _drain(spark, out.writeStream.outputMode("update")
-             .format("memory").queryName(query_name)
-             .option("checkpointLocation", checkpoint)
-             .trigger(availableNow=True))
-    emissions = spark.table(query_name)
-    return (emissions.groupBy("user_id")
-            .agg(F.max("n_seen").alias("n_events"),
-                 F.max_by("l", "n_seen").alias("lf"),
-                 F.max_by("b", "n_seen").alias("bf"))
-            .filter(F.col("n_events") >= 4)
-            .select("user_id", "n_events",
-                    F.round(F.col("lf"), 6).alias("level_final"),
-                    F.round(F.col("bf"), 6).alias("trend_final"),
-                    F.round(F.col("lf") + F.col("bf"), 6)
+    state = _fold_state(events, "user_id",
+                        state="x1 DOUBLE, l DOUBLE, b DOUBLE, seen LONG",
+                        init=(0.0, 0.0, 0.0, 0), fold=fold,
+                        checkpoint=checkpoint)
+    return (state.filter(F.col("seen") >= 4)
+            .select("user_id", F.col("seen").alias("n_events"),
+                    F.round("l", 6).alias("level_final"),
+                    F.round("b", 6).alias("trend_final"),
+                    F.round(F.col("l") + F.col("b"), 6)
                     .alias("forecast_next")))
 
 
 def streaming_changepoint_final(spark: SparkSession, events_dir: str, *,
-                                checkpoint: str, query_name: str,
-                                output_dir: str | None = None,
+                                checkpoint: str,
                                 window_hours: int | None = None
                                 ) -> DataFrame:
     """Per-type ONLINE binary-segmentation change-point detection — the
     streaming counterpart of the batch ``events_changepoint_binary``
     plan (the last batch-only state machine without an online form):
     each micro-batch folds its events into a per-type hourly-count
-    histogram kept as explicit group state, re-scores every candidate
-    split against the full series, and emits the current best split —
-    the "where did the level shift" answer refreshed as data arrives.
+    histogram kept as explicit group state, and the best split is
+    scored on the drained histogram — the "where did the level shift"
+    answer, current as of the last committed batch.
 
     STATE BOUNDEDNESS — the honest version: unlike the O(1)-per-key
     CUSUM/rate-limit/Holt twins, the state here is the (hour -> count)
@@ -1117,103 +945,35 @@ def streaming_changepoint_final(spark: SparkSession, events_dir: str, *,
 
     Arithmetic parity: hourly counts are exact integers and ADDITION
     COMMUTES, so (unlike the order-sensitive twins) batch slicing
-    cannot change the histogram; the per-split gain is then computed
-    in Python floats through the IDENTICAL IEEE expression tree as the
-    batch plan's in-row HOF — (double(sk)*sk/k + double(S-sk)*(S-sk)/
-    (L-k) - double(S)*S/L), left-associated exactly as Spark parses
-    it — with the same strict-> earliest-k argmax, so the drained
-    best split is bit-identical and the final round(6) runs JVM-side
-    on the emitted doubles exactly as the batch plan's does.  The
-    prefix sums are O(L) per emission (the batch HOF's O(L^2) slice
-    sums produce the same exact integers).
+    cannot change the histogram; the drained (hrs, ns) state then goes
+    through the batch plan's own split expression
+    (``plans.events.changepoint_split``), so the scores are the same
+    JVM expression tree on the same integers.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..plans.events import changepoint_split
 
     events = _events_stream(spark, events_dir, max_files=1)
 
-    def update(key, pdfs, state: GroupState):
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        if state.exists:
-            hrs0, ns0, seen = state.get
-            counts = dict(zip(hrs0, ns0))
-        else:
-            counts, seen = {}, 0
+    def fold(pdf, st):
+        counts = dict(zip(*st))
         by_hr = (pdf["ts"] // NS_PER_HOUR).value_counts()
         for hr, c in by_hr.items():
             counts[int(hr)] = counts.get(int(hr), 0) + int(c)
-        seen += len(pdf)
-        if window_hours is not None and counts:
+        if window_hours is not None:
             cutoff = max(counts) - window_hours
             counts = {h: c for h, c in counts.items() if h > cutoff}
         hrs = sorted(counts)
-        ns = [counts[h] for h in hrs]
-        state.update((hrs, ns, seen))
-        L, S = len(hrs), sum(ns)
-        best_g, best_k, best_sk = -1e308, 0, 0
-        sk = 0
-        for k in range(1, L):
-            sk += ns[k - 1]
-            g = (float(sk) * sk / k
-                 + float(S - sk) * (S - sk) / (L - k)
-                 - float(S) * S / L)
-            if g > best_g:
-                best_g, best_k, best_sk = g, k, sk
-        yield pd.DataFrame({
-            "event_type": [key[0]], "seen": [seen],
-            "n_hours": [L], "s_total": [S],
-            "split_hr": [hrs[best_k - 1] if best_k else 0],
-            "left_len": [best_k], "sk": [best_sk],
-            "g": [best_g if best_k else 0.0]})
+        return hrs, [counts[h] for h in hrs]
 
-    out = (events.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "event_type STRING, seen LONG, n_hours LONG, s_total LONG,"
-            " split_hr LONG, left_len LONG, sk LONG, g DOUBLE"),
-        stateStructType="hrs ARRAY<LONG>, ns ARRAY<LONG>, seen LONG",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout))
-    if output_dir is not None:
-        # Checkpoint-recoverable sink (the streaming_cusum contract):
-        # a stopped query restarted with the same checkpoint folds only
-        # the new files onto the restored histograms, and the parquet
-        # dir accumulates every emission across runs so the max_by
-        # read below stays current for all types.
-        def sink(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .foreachBatch(sink)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.read.parquet(output_dir)
-    else:
-        query = _drain(spark, out.writeStream.outputMode("update")
-                 .format("memory").queryName(query_name)
-                 .option("checkpointLocation", checkpoint)
-                 .trigger(availableNow=True))
-        emissions = spark.table(query_name)
-    # seen is monotone per type: max_by(seen) is the drained state.
-    # Means + rounding are JVM-side with the batch plan's expression
-    # trees; the L >= 2 floor applies on the drained state (a stream
-    # can't know the final hour count mid-flight).
-    final = (emissions.groupBy("event_type")
-             .agg(F.max_by(F.struct("n_hours", "s_total", "split_hr",
-                                    "left_len", "sk", "g"),
-                           "seen").alias("b"))
-             .select("event_type",
-                     F.col("b.n_hours").alias("n_hours"),
-                     F.col("b.s_total").alias("S"),
-                     F.col("b.split_hr").alias("split_hr"),
-                     F.col("b.left_len").alias("left_len"),
-                     F.col("b.sk").alias("sk"),
-                     F.col("b.g").alias("g"))
-             .filter(F.col("n_hours") >= 2))
-    return final.select(
-        "event_type", "n_hours", "split_hr", "left_len",
-        F.round(F.expr("CAST(sk AS DOUBLE) / left_len"), 6)
-        .alias("left_mean"),
-        F.round(F.expr("CAST(S - sk AS DOUBLE) / (n_hours - left_len)"),
-                6).alias("right_mean"),
-        F.round(F.col("g"), 6).alias("gain"))
+    state = _fold_state(events, "event_type",
+                        state="hrs ARRAY<LONG>, ns ARRAY<LONG>",
+                        init=([], []), fold=fold, checkpoint=checkpoint)
+    # The batch plan's L >= 2 floor applies on the drained state (a
+    # stream can't know the final hour count mid-flight).
+    series = (state
+              .select("event_type", "hrs", "ns",
+                      F.size("hrs").cast("long").alias("L"),
+                      F.expr("aggregate(ns, 0L, (a, x) -> a + x)")
+                      .alias("S"))
+              .filter(F.col("L") >= 2))
+    return changepoint_split(series)

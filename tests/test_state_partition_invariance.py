@@ -9,8 +9,6 @@ results."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -32,8 +30,7 @@ def _run_cusum(spark, sf_dir):
                      .cast("double").alias("sv"))
                 .filter(F.col("n") >= 4))
     return jobs.streaming_cusum_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name=f"inv_{uuid.uuid4().hex[:8]}", baseline=baseline,
+        spark, landing, checkpoint=checkpoint, baseline=baseline,
         slack_mult=1.0 + _CUSUM_SLACK)
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
+
 from kinesis_s3_data_shipper_spark.streaming.jobs import (
     streaming_running_user_counts)
 
@@ -22,8 +24,7 @@ def test_running_counts_match_batch(spark, tmp_path, sf_small):
     shutil.copy(src, landing / "b.parquet")
 
     got = streaming_running_user_counts(
-        spark, str(landing), checkpoint=str(tmp_path / "ckpt"),
-        query_name="running_counts_test")
+        spark, str(landing), checkpoint=str(tmp_path / "ckpt"))
     got_map = {r.user_id: r.total for r in got.collect()}
 
     want = (spark.read.parquet(src).groupBy("user_id").count().collect())
@@ -54,8 +55,7 @@ def test_tws_user_stats_match_batch(spark, tmp_path, sf_small):
     shutil.copy(src, landing / "b.parquet")
 
     got = streaming_user_stats_tws(
-        spark, str(landing), checkpoint=str(tmp_path / "ckpt_tws"),
-        query_name="tws_stats_test")
+        spark, str(landing), checkpoint=str(tmp_path / "ckpt_tws"))
     got_map = {r.user_id: (r.n, round(r.sum_value, 6))
                for r in got.collect()}
 
@@ -88,8 +88,7 @@ def test_incremental_merge_matches_batch(spark, tmp_path, sf_small):
     table_dir = str(tmp_path / "table")
     got = streaming_incremental_merge(
         spark, str(landing), table_dir=table_dir,
-        checkpoint=str(tmp_path / "ckpt_merge"),
-        query_name="inc_merge_test")
+        checkpoint=str(tmp_path / "ckpt_merge"))
     got_map = {r.user_id: (r.n, r.sum_micros) for r in got.collect()}
 
     want = (spark.read.parquet(src)
@@ -252,7 +251,7 @@ def test_vacuum_concurrent_with_stream_preserves_retry_base(spark,
     got = streaming_incremental_merge(
         spark, str(landing), table_dir=table_dir,
         checkpoint=str(tmp_path / "ckpt_vac"),
-        query_name="inc_merge_vacuum_race", vacuum_keep=2)
+        vacuum_keep=2)
     got_map = {r.user_id: (r.n, r.sum_micros) for r in got.collect()}
 
     want = (spark.read.parquet(src)
@@ -319,7 +318,7 @@ def test_vacuum_tolerates_stray_dirs(tmp_path):
     assert left == ["v=1", "v=1.bak", "v=2", "v=tmp"]
 
 
-def test_streaming_cusum_state_survives_checkpoint_restart(spark, tmp_path,
+def test_streaming_cusum_state_survives_checkpoint_restart(spark,
                                                            sf_oracle):
     """The stateful CUSUM's group state must survive a full STOP and
     checkpoint-resume: drain the first two time slices, end the query,
@@ -352,20 +351,17 @@ def test_streaming_cusum_state_survives_checkpoint_restart(spark, tmp_path,
                      .cast("double").alias("sv"))
                 .filter(F.col("n") >= 4))
 
-    out_dir = str(tmp_path / "cusum_emissions")
     partial = streaming_cusum_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="cusum_ckpt_a", baseline=baseline,
-        slack_mult=1.0 + _CUSUM_SLACK, output_dir=out_dir).collect()
+        spark, landing, checkpoint=checkpoint, baseline=baseline,
+        slack_mult=1.0 + _CUSUM_SLACK).collect()
     assert len(partial) > 0
     # The first drain saw only 2/3 of the data.
     partial_n = {r.user_id: r.n_events for r in partial}
 
     os.rename(hidden, third)
     resumed = streaming_cusum_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="cusum_ckpt_b", baseline=baseline,
-        slack_mult=1.0 + _CUSUM_SLACK, output_dir=out_dir)
+        spark, landing, checkpoint=checkpoint, baseline=baseline,
+        slack_mult=1.0 + _CUSUM_SLACK)
     got = {r.user_id: (r.n_events, r.cusum_final)
            for r in resumed.collect()}
 
@@ -385,7 +381,7 @@ def test_streaming_cusum_state_survives_checkpoint_restart(spark, tmp_path,
 
 
 def test_streaming_rate_limit_state_survives_checkpoint_restart(
-        spark, tmp_path, sf_oracle):
+        spark, sf_oracle):
     """The token bucket's group state must survive a full STOP and
     checkpoint-resume: drain two time slices, end the query, land the
     third slice, re-run with the SAME checkpoint. The resumed query
@@ -408,19 +404,16 @@ def test_streaming_rate_limit_state_survives_checkpoint_restart(
     hidden = os.path.join(os.path.dirname(landing), "slice_2.hold")
     os.rename(third, hidden)
 
-    out_dir = str(tmp_path / "rl_emissions")
     partial = streaming_rate_limit_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="rl_ckpt_a", cap_units=_TB_CAP_UNITS,
-        cost_units=_TB_REFILL_NS, output_dir=out_dir).collect()
+        spark, landing, checkpoint=checkpoint, cap_units=_TB_CAP_UNITS,
+        cost_units=_TB_REFILL_NS).collect()
     assert len(partial) > 0
     partial_n = {r.user_id: r.n_events for r in partial}
 
     os.rename(hidden, third)
     resumed = streaming_rate_limit_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="rl_ckpt_b", cap_units=_TB_CAP_UNITS,
-        cost_units=_TB_REFILL_NS, output_dir=out_dir)
+        spark, landing, checkpoint=checkpoint, cap_units=_TB_CAP_UNITS,
+        cost_units=_TB_REFILL_NS)
     got = {r.user_id: (r.n_events, r.n_admitted, r.n_rejected,
                        r.level_final_units)
            for r in resumed.collect()}
@@ -433,6 +426,58 @@ def test_streaming_rate_limit_state_survives_checkpoint_restart(
     assert got == want
     grew = [u for u, (n, *_rest) in got.items()
             if n > partial_n.get(u, 0)]
+    assert grew, "third slice added no events to any user — staging bug"
+
+
+@pytest.mark.parametrize("twin", ["holt", "match_recognize",
+                                  "running_user_counts"])
+def test_stateful_twin_state_survives_checkpoint_restart(spark, sf_oracle,
+                                                         twin):
+    """The restart contract of the CUSUM, rate-limit and change-point
+    tests above, for the remaining applyInPandasWithState twins: drain
+    two of three time slices, stop, land the third, drain again on the
+    SAME checkpoint.  The state read after the resume must equal the
+    batch plan over all three slices, and some user's count must have
+    grown past the partial drain's."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from kinesis_s3_data_shipper_spark.plans import REGISTRY, all_queries
+    from kinesis_s3_data_shipper_spark.plans.streaming import (
+        _stage_time_slices)
+    from kinesis_s3_data_shipper_spark.sources.tables import load_table
+    from kinesis_s3_data_shipper_spark.streaming import jobs
+
+    run, n_col, batch_plan = {
+        "holt": (jobs.streaming_holt_final, "n_events", "events_holt_step"),
+        "match_recognize": (jobs.streaming_match_recognize_final,
+                            "n_events", "events_match_recognize"),
+        "running_user_counts": (jobs.streaming_running_user_counts,
+                                "total", None),
+    }[twin]
+    if batch_plan is None:
+        batch = (load_table(spark, sf_oracle, "events").groupBy("user_id")
+                 .agg(F.count("*").alias("total")))
+    else:
+        all_queries()
+        batch = REGISTRY[batch_plan].spark(spark, sf_oracle)
+
+    landing, checkpoint = _stage_time_slices(spark, sf_oracle, n_slices=3)
+    third = os.path.join(landing, "slice_2.parquet")
+    hidden = os.path.join(os.path.dirname(landing), "slice_2.hold")
+    os.rename(third, hidden)
+
+    partial = run(spark, landing, checkpoint=checkpoint).collect()
+    assert partial
+    partial_n = {r.user_id: r[n_col] for r in partial}
+
+    os.rename(hidden, third)
+    resumed = run(spark, landing, checkpoint=checkpoint)
+    got = sorted(map(tuple, resumed.select(batch.columns).collect()))
+    assert got == sorted(map(tuple, batch.collect()))
+    grew = [r.user_id for r in resumed.collect()
+            if r[n_col] > partial_n.get(r.user_id, 0)]
     assert grew, "third slice added no events to any user — staging bug"
 
 
@@ -475,8 +520,7 @@ def test_streaming_match_recognize_half_open_match_spans_batches(
         os.utime(dest, (1_000_000 + i, 1_000_000 + i))
 
     out = streaming_match_recognize_final(
-        spark, landing, checkpoint=str(tmp_path / "ckpt"),
-        query_name="mr_halfopen")
+        spark, landing, checkpoint=str(tmp_path / "ckpt"))
     got = {r.user_id: (r.n_events, r.n_matches, r.final_state)
            for r in out.collect()}
     assert got == {7: (3, 1, 0), 8: (2, 0, 0)}
@@ -521,8 +565,7 @@ def test_streaming_holt_init_spans_batches(spark, tmp_path):
         os.utime(dest, (1_000_000 + i, 1_000_000 + i))
 
     out = streaming_holt_final(
-        spark, landing, checkpoint=str(tmp_path / "ckpt"),
-        query_name="holt_init_span")
+        spark, landing, checkpoint=str(tmp_path / "ckpt"))
     got = {r.user_id: r for r in out.collect()}
 
     def fold(vals):
@@ -579,7 +622,7 @@ def test_time_travel_horizon_is_vacuum_retention(spark, tmp_path):
     assert [(r.user_id, r.n) for r in latest.collect()] == [(7, 2)]
 
 
-def test_streaming_changepoint_histogram_survives_restart(spark, tmp_path,
+def test_streaming_changepoint_histogram_survives_restart(spark,
                                                           sf_oracle):
     """The change-point twin's (hour -> count) histogram state must
     survive a full STOP and checkpoint-resume: drain two time slices,
@@ -601,17 +644,14 @@ def test_streaming_changepoint_histogram_survives_restart(spark, tmp_path,
     hidden = os.path.join(os.path.dirname(landing), "slice_2.hold")
     os.rename(third, hidden)
 
-    out_dir = str(tmp_path / "chgpt_emissions")
     partial = streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="chgpt_ckpt_a", output_dir=out_dir).collect()
+        spark, landing, checkpoint=checkpoint).collect()
     assert partial
     partial_hours = {r.event_type: r.n_hours for r in partial}
 
     os.rename(hidden, third)
     resumed = streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="chgpt_ckpt_b", output_dir=out_dir)
+        spark, landing, checkpoint=checkpoint)
     got = {r.event_type: (r.n_hours, r.split_hr, r.left_len,
                           r.left_mean, r.right_mean, r.gain)
            for r in resumed.collect()}
@@ -636,12 +676,16 @@ def test_streaming_changepoint_windowed_state_is_bounded(spark, tmp_path,
                                                          sf_oracle):
     """The production-capped twin (r09 verdict ask #4): with
     window_hours=W the per-type histogram state must hold at most W
-    hours in EVERY emission (n_hours IS len(state.hrs) post-trim, so
-    the per-batch emissions are a state-size trace), and the drained
+    hours after EVERY committed batch (each batch's state is read back
+    from the checkpoint's state store by batchId), and the drained
     result must equal the batch change-point plan filtered to the
     trailing W hours per type — the windowed oracle with W
     substituted.  W=24 here (far below the ~720-hour fixture span) so
     the trim provably engages mid-stream, not just at drain."""
+    import os
+
+    from pyspark.sql import functions as F
+
     from kinesis_s3_data_shipper_spark.plans.events import (
         CHANGEPOINT_WINDOW_HOURS, CHANGEPOINT_WINDOWED_ORACLE)
     from kinesis_s3_data_shipper_spark.plans.streaming import (
@@ -653,26 +697,30 @@ def test_streaming_changepoint_windowed_state_is_bounded(spark, tmp_path,
 
     W = 24
     landing, checkpoint = _stage_time_slices(spark, sf_oracle, n_slices=3)
-    out_dir = str(tmp_path / "chgptw_emissions")
     final = streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint,
-        query_name="chgptw_bound", output_dir=out_dir, window_hours=W)
+        spark, landing, checkpoint=checkpoint, window_hours=W)
 
     oracle = CHANGEPOINT_WINDOWED_ORACLE.replace(
         f"- {CHANGEPOINT_WINDOW_HOURS}", f"- {W}")
     con = duckdb_connection(sf_oracle)
     compare(final, con.sql(oracle).df(), "changepoint_windowed_W24")
 
-    emissions = spark.read.parquet(out_dir).collect()
-    assert emissions
-    assert max(r.n_hours for r in emissions) <= W, "state cap breached"
+    batches = sorted(int(f) for f in
+                     os.listdir(os.path.join(checkpoint, "commits"))
+                     if f.isdigit())
+    assert batches == [0, 1, 2], batches
+    for b in batches:
+        sizes = [r.n for r in spark.read.format("statestore")
+                 .option("batchId", b).load(checkpoint)
+                 .select(F.size("value.groupState.hrs").alias("n"))
+                 .collect()]
+        assert sizes and max(sizes) <= W, ("state cap breached", b, sizes)
     # the cap engaged mid-stream: the UNCAPPED twin's histograms grow
     # far past W over the same staged slices
     full = {r.event_type: r.n_hours
             for r in streaming_changepoint_final(
                 spark, landing,
-                checkpoint=str(tmp_path / "ckpt_full"),
-                query_name="chgptw_full").collect()}
+                checkpoint=str(tmp_path / "ckpt_full")).collect()}
     assert all(n > W for n in full.values()), full
 
 
@@ -698,21 +746,18 @@ def test_streaming_changepoint_windowed_survives_restart(spark, tmp_path,
     hidden = os.path.join(os.path.dirname(landing), "slice_2.hold")
     os.rename(third, hidden)
 
-    out_dir = str(tmp_path / "chgptw_emissions")
     partial = streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint, query_name="chgptw_a",
-        output_dir=out_dir, window_hours=W).collect()
+        spark, landing, checkpoint=checkpoint, window_hours=W).collect()
     assert partial and max(r.n_hours for r in partial) <= W
 
     os.rename(hidden, third)
     resumed = streaming_changepoint_final(
-        spark, landing, checkpoint=checkpoint, query_name="chgptw_b",
-        output_dir=out_dir, window_hours=W)
+        spark, landing, checkpoint=checkpoint, window_hours=W)
     got = sorted(map(tuple, resumed.collect()))
 
     # one-shot reference over the same staged slices, fresh checkpoint
     oneshot = streaming_changepoint_final(
         spark, landing, checkpoint=str(tmp_path / "ckpt_oneshot"),
-        query_name="chgptw_c", window_hours=W)
+        window_hours=W)
     want = sorted(map(tuple, oneshot.collect()))
     assert got == want
